@@ -86,18 +86,16 @@ def _pipeline_graph(spark: SparkSession) -> dict:
 
 
 def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table fanned out to the session's parallelism.
+    """documents table spread to the session's parallelism.
 
     The fixture is ONE small parquet file (single row group → single input
     split), so heavy per-row compute (shingling, minhash signatures, regex
     token counts) would serialize on one core at any local[N] — measured:
     the minhash query spent most of its time in a 1-task stage. A 100-TB
-    corpus has thousands of splits; the cheap round-robin repartition makes
-    test-scale plans exercise the same parallelism the operators have there.
+    corpus has thousands of splits, where ``spread_scan`` adds no exchange;
+    on the fixture it fans the scan out to ``defaultParallelism``.
     """
-    return _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    return _spread(_t(spark, sf_dir, "documents"))
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -1,13 +1,22 @@
-"""Shared bounded managed-persist pool for operator scan tables.
+"""The package's one bounded persist pool, for operator scan tables and the
+KG pipeline's parsed frame.
 
 Several operators consume an expensive scan (md5-heavy shingle/feature
-construction, Bloom map passes, banded-LSH projections) from MULTIPLE
+construction, Bloom map passes, banded-LSH projections, the KG annotate+parse
+scan behind ``plans/pipeline.expanded_frame(cache=True)``) from MULTIPLE
 consumers in one query plan. Spark reuses exchanges, not scans, so without a
 persist the scan recomputes once per consumer (guide §5 "Caching": reuse +
-recompute-cost is exactly the case where persist pays). The pool is bounded
-the same way plans/pipeline.py's _MANAGED_PERSISTS is: each operator call
-evicts the blocks of the previous call before persisting its own, so a
-long-lived driver looping queries never accumulates storage blocks.
+recompute-cost is exactly the case where persist pays). The pool is bounded:
+each call evicts the blocks of the previous call — whichever operator or
+pipeline made it — before persisting its own, so a long-lived driver looping
+queries never accumulates storage blocks.
+
+Contract: ONE pooled call is live at a time, on the driver's single thread.
+The pool is unsynchronized module state; a frame returned by an earlier call
+stays correct after eviction but recomputes its scan. Callers that need two
+pooled frames alive together (or run queries from several threads) must opt
+out where the entry point allows it (``cache=False``,
+``cache_signatures=False``) and persist themselves.
 
 ``persist_scan``  — evict every pooled frame, persist ``df``, track it (the
                     one-slot contract ``operators/dedup.py`` shipped in r2).

@@ -24,32 +24,9 @@ from ..operators.expansion import expansion_stage
 from ..operators.fused import annotate_parse_stage, fused_consensus_stage
 from ..operators.graph import build_edges, build_nodes
 from ..operators.linking import link_entities
+from ..operators.persistpool import persist_scan
 from ..operators.taxonomy import build_taxonomy, remap_relations
 from ..sources.catalog import StageCatalog
-
-
-#: bounded managed-persist pool: at most ONE expansion frame's annotate scan
-#: is cached at a time — each expanded_frame(cache=True) call evicts the
-#: previous call's block before persisting its own (round-2 verdict: a
-#: long-lived driver looping extract_triples(cache=True) used to accumulate
-#: storage blocks without bound).
-_MANAGED_PERSISTS: list[DataFrame] = []
-
-
-def _persist_managed(df: DataFrame) -> DataFrame:
-    """Persist ``df`` after unpersisting any frame a previous
-    ``expanded_frame(cache=True)`` call left cached. Callers that need two
-    expansion frames alive simultaneously must pass ``cache=False`` and
-    manage persistence themselves (the documented contract)."""
-    while _MANAGED_PERSISTS:
-        stale = _MANAGED_PERSISTS.pop()
-        try:
-            stale.unpersist()
-        except Exception:
-            pass  # session of the stale frame may already be stopped
-    p = df.persist()
-    _MANAGED_PERSISTS.append(p)
-    return p
 
 
 def expanded_frame(
@@ -76,9 +53,10 @@ def expanded_frame(
         # parsed is consumed twice (taxonomy barrier + main chain); persisting
         # avoids re-running the scorer scan per job. The checkpointed
         # (StageCatalog) path is the 100-TB equivalent — a stage table on
-        # disk instead of executor memory. Managed: the previous call's
-        # cached frame is evicted (bounded storage across repeated calls).
-        parsed = _persist_managed(parsed)
+        # disk instead of executor memory. Pooled: the previous pooled
+        # frame (this function's or an operator's) is evicted first, so
+        # repeated calls keep storage bounded.
+        parsed = persist_scan(parsed)
     taxonomy = build_taxonomy(parsed, annotators=annotators, scorer=scorer)  # global barrier (tiny)
     remapped = remap_relations(
         parsed, taxonomy, cols=tuple(f"{ann}_ternary" for ann in annotators)

@@ -5,8 +5,9 @@ The synthetic corpus embeds relation sentences drawn from a closed template
 set over a closed cast of person names (FIXTURES.md §A1); the deterministic
 scorers (replacing the reference's LLM calls, SURVEY §2.7 M1–M11) recognize
 exactly these templates. Because generator, scorers, Spark pipeline, and the
-plain-Python parity oracle all share THIS module, the parity gate (P/R ≥ 0.95
-vs the reference-logic run) measures pipeline fidelity, not model luck.
+plain-Python parity oracle all share THIS module, the parity gate (exact
+triple agreement with the reference-logic run) measures pipeline fidelity,
+not model luck.
 
 Template phrasing mirrors the reference's own exemplars
 (reference ``gemma.py:35``, ``few_shot_gemini_api.py:124-144``).
@@ -109,8 +110,18 @@ def _longest_literal(fmt: str) -> str:
     ``literal not in text`` proves ``finditer`` would find nothing — a C
     substring probe instead of a full regex scan (find_instances was the
     single hottest scorer kernel: ~10 whole-text regex scans per doc, most
-    of which match nothing)."""
-    return max(re.split(r"\{[AB]\}", fmt), key=len)
+    of which match nothing).
+
+    Sound only while no fragment holds a regex metacharacter (``.``, ``(``,
+    ``?`` …): the fmt is compiled as a raw regex, so such a fragment could
+    match text that lacks it verbatim and the probe would skip real matches.
+    Raises ``ValueError`` for such a fmt — every template goes through here
+    at import."""
+    frags = re.split(r"\{[AB]\}", fmt)
+    for frag in frags:
+        if re.escape(frag) != frag:
+            raise ValueError(f"template fragment {frag!r} has regex metacharacters: {fmt!r}")
+    return max(frags, key=len)
 
 
 _COMPILED = [

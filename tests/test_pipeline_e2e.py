@@ -1,9 +1,13 @@
-"""End-to-end pipeline: golden accuracy, reference parity (the P/R ≥ 0.95
-gate of BASELINE.json), linking/graph consistency, checkpoint/resume."""
+"""End-to-end pipeline: golden accuracy, exact reference parity (no false
+positive or false negative triple vs the reference-logic run), linking/graph
+consistency, checkpoint/resume, bounded persist pool."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.dedup import (
+    minhash_lsh_pairs,
+)
 from research_on_document_level_person_relation_extraction_in_chinese_spark.operators.evaluate import (
     evaluate_entities,
     evaluate_pairs,
@@ -55,7 +59,8 @@ def test_accuracy_vs_golden(spark, docs, triples):
 
 
 def test_parity_vs_reference_logic(spark, docs, triples):
-    """BASELINE gate: Spark pipeline reproduces the reference-logic run."""
+    """Parity gate: the Spark pipeline reproduces the reference-logic run
+    triple for triple."""
     rows = docs.select("url", "text", "lang").collect()
     ref = run_reference_logic([r.asDict() for r in rows])
     ref_df = spark.createDataFrame(
@@ -63,8 +68,8 @@ def test_parity_vs_reference_logic(spark, docs, triples):
     )
     res = evaluate_triples(triples, ref_df)
     print("parity eval:", res)
-    assert res["precision"] >= 0.95, res
-    assert res["recall"] >= 0.95, res
+    assert res["tp"] > 0, res
+    assert res["fp"] == 0 and res["fn"] == 0, res
 
 
 def test_linking_and_graph(spark, docs):
@@ -84,13 +89,17 @@ def test_linking_and_graph(spark, docs):
 
 
 def test_repeated_extract_no_persist_leak(spark):
-    """Round-2 verdict item: a driver looping extract_triples(cache=True)
-    must not accumulate storage blocks — the managed-persist pool keeps at
-    most one expansion frame cached."""
+    """A driver looping extract_triples(cache=True) interleaved with a
+    pooled dedup operator must not accumulate storage blocks — the KG
+    pipeline and the operators share ONE persist pool, which keeps at most
+    one call's frame cached. The cache is cleared first so the baseline
+    holds no frame an earlier test left in the pool."""
     small = generate_corpus(spark, 30, seed=7)
+    spark.catalog.clearCache()
     baseline = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     for _ in range(10):
         extract_triples(small, cache=True).count()
+        minhash_lsh_pairs(small, id_col="url", cache_signatures=True).count()
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after <= baseline + 1, (baseline, after)
 

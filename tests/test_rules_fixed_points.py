@@ -1,5 +1,7 @@
 """Invariants of the closed-cast rule set."""
 
+import pytest
+
 from research_on_document_level_person_relation_extraction_in_chinese_spark.functions.chinese import (
     s2t,
 )
@@ -100,3 +102,14 @@ def test_find_instances_literal_prefilter_equivalent():
             assert R.find_instances(t, include_expansion_only=flag) == ref(
                 t, include_expansion_only=flag
             )
+
+
+def test_unsafe_template_fragment_raises():
+    """The longest-literal prefilter is sound only for metacharacter-free
+    fragments; the import-time check must reject any other template."""
+    from research_on_document_level_person_relation_extraction_in_chinese_spark.scorers import (
+        rules as R,
+    )
+
+    with pytest.raises(ValueError):
+        R._longest_literal("{A}與{B}是好友.")
